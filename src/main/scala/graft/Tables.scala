@@ -20,44 +20,35 @@ object Tables {
     * `spark.read.parquet(path)` call re-infers the schema from parquet
     * footers, measured at 53–73 ms per call on this corpus — and the
     * graded bench constructs every query 3–5 times. Keyed on the
-    * (path, mtime, size) fingerprint of every file under the table path;
-    * JVM-lifetime only, never persisted; any rewrite re-infers. The
-    * session conf matters to inference (nanosAsLong surfaces INT64-nanos
-    * as LongType), so the session's own first inference — not a
-    * hard-coded schema — is what gets reused.
+    * (path, mtime, size) fingerprint of every file under the table path
+    * plus the session's parquet-inference confs ([[Memo.parquetInference]]:
+    * nanosAsLong surfaces INT64-nanos as LongType, binaryAsString an
+    * unannotated BINARY as a string), so the session's own inference —
+    * not a hard-coded schema — is what gets reused; JVM-lifetime only,
+    * never persisted; any rewrite re-infers.
     */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  private val schemaMemo =
+    new Memo[String, org.apache.spark.sql.types.StructType](capacity = 256)
 
   private def tableFingerprint(path: String): Option[String] =
     try {
-      val root = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(root)) None
-      else {
-        val files = new scala.collection.mutable.ArrayBuffer[String]()
-        java.nio.file.Files.walk(root, 3).forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p)) {
-            val a = java.nio.file.Files.readAttributes(
-              p, classOf[java.nio.file.attribute.BasicFileAttributes])
-            files += s"$p:${a.lastModifiedTime.toMillis}:${a.size}"
-          }
-        }
-        Some(files.sorted.mkString(","))
-      }
+      val fs = Memo.fileSystem(path)
+      def files(s: org.apache.hadoop.fs.FileStatus): Seq[String] =
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(files)
+        else Seq(s.getPath.toString)
+      val root = fs.getFileStatus(new org.apache.hadoop.fs.Path(path))
+      Some(files(root).sorted.map { f =>
+        val (mtime, size) = Memo.stamp(f)
+        s"$f:$mtime:$size"
+      }.mkString(","))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     tableFingerprint(path) match {
       case Some(fp) =>
-        val key = s"$path|$fp"
-        val hit = schemaMemo.get(key)
-        val schema =
-          if (hit != null) hit
-          else {
-            val s = spark.read.parquet(path).schema
-            schemaMemo.put(key, s); s
-          }
+        val schema = schemaMemo(s"$path|$fp|${Memo.parquetInference(spark)}")(
+          spark.read.parquet(path).schema)
         spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }

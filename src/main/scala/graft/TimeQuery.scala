@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timing probe: `runMain graft.TimeQuery q38 q36 ...`
   * under SPARK_GRAFT_SF_DIR/SPARK_GRAFT_CPUS, same session config as Bench.
   * Accepts full query keys or unique prefixes; repeats each query
@@ -12,15 +10,7 @@ object TimeQuery {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     val keys = args.toSeq.map { a =>
       SparkEntry.queries.keys.find(k => k == a || k.startsWith(a))

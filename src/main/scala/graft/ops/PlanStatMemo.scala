@@ -15,8 +15,9 @@ import org.apache.spark.sql.DataFrame
   * Discipline (the ruling's terms):
   *  - keyed on the probed plan's `semanticHash` PLUS the
   *    (path, mtime, size) fingerprint of every file the plan's scan
-  *    leaves read (`DataFrame.inputFiles`) plus a caller tag — rewriting
-  *    any input invalidates the entry;
+  *    leaves read (`DataFrame.inputFiles`, stamped by [[graft.Memo.stamp]]
+  *    on any filesystem) plus a caller tag — rewriting any input
+  *    invalidates the entry;
   *  - JVM-lifetime only, NEVER persisted — a fresh run always recomputes
   *    from the parquet inputs;
   *  - non-file-backed inputs (in-memory test relations) never memoize,
@@ -24,10 +25,9 @@ import org.apache.spark.sql.DataFrame
   */
 object PlanStatMemo {
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Any]()
+  private val memo = new graft.Memo[String, Any](capacity = 1024)
 
-  private[graft] def lookup(k: String): Option[Any] = Option(memo.get(k))
-  private[graft] def clear(): Unit = memo.clear()
+  private[graft] def lookup(k: String): Option[Any] = memo.get(k)
 
   /** The memo key, or None when the input is not entirely file-backed or
     * any file cannot be fingerprinted — those probes always recompute.
@@ -38,25 +38,19 @@ object PlanStatMemo {
       if (files.isEmpty) None
       else {
         val fp = files.sorted.map { f =>
-          val p = java.nio.file.Paths.get(java.net.URI.create(f))
-          val a = java.nio.file.Files.readAttributes(
-            p, classOf[java.nio.file.attribute.BasicFileAttributes])
-          s"$f:${a.lastModifiedTime.toMillis}:${a.size}"
+          val (mtime, size) = graft.Memo.stamp(f)
+          s"$f:$mtime:$size"
         }.mkString(",")
         Some(s"${df.queryExecution.analyzed.semanticHash()}|$tag|$fp")
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Memoized `compute` over `df` under `tag`; straight-through when no
-    * key exists. Duplicate concurrent computes are benign (both sides
-    * compute the same deterministic statistic; last put wins).
+    * key exists.
     */
   def cached[T](df: DataFrame, tag: String)(compute: => T): T =
     key(df, tag) match {
-      case Some(k) =>
-        val hit = memo.get(k)
-        if (hit != null) hit.asInstanceOf[T]
-        else { val v = compute; memo.put(k, v.asInstanceOf[Any]); v }
+      case Some(k) => memo(k)(compute).asInstanceOf[T]
       case None => compute
     }
 

@@ -1975,18 +1975,20 @@ object AtomicCommit {
     */
   private[graft] def scanSchema(spark: SparkSession, root: String,
                                 m: Manifest): org.apache.spark.sql.types.StructType = {
-    // memoized per (root, manifest CONTENT): the schema derives from
-    // the generation set's footers (immutable per generation name — all
-    // named in `entries`) and the mapping-state props, both part of
-    // Manifest equality; branches sharing a root and a version number
-    // still key apart by content. Saves the per-relation footer probe —
-    // relations are instantiated several times per query's analysis
-    if (schemaMemo.size > 64) schemaMemo.clear()
-    schemaMemo.computeIfAbsent((root, m), _ => scanSchema0(spark, root, m))
+    // memoized per (root, manifest CONTENT, parquet-inference confs):
+    // the schema derives from the generation set's footers (immutable
+    // per generation name — all named in `entries`) and the
+    // mapping-state props, both part of Manifest equality; branches
+    // sharing a root and a version number still key apart by content.
+    // Saves the per-relation footer probe — relations are instantiated
+    // several times per query's analysis
+    schemaMemo((root, m, graft.Memo.parquetInference(spark)))(
+      scanSchema0(spark, root, m))
   }
 
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Manifest), org.apache.spark.sql.types.StructType]()
+  private val schemaMemo = new graft.Memo[
+    (String, Manifest, String), org.apache.spark.sql.types.StructType](
+    capacity = 64)
 
   private def scanSchema0(spark: SparkSession, root: String,
                           m: Manifest): org.apache.spark.sql.types.StructType = {
@@ -2574,16 +2576,12 @@ object AtomicCommit {
     * 50k entries — TableBench `meta`). Keying on content (not name or
     * version) is collision-free by construction and correct across
     * stores, branches, and vacuumed re-publishes; a hit costs one
-    * String hash + equals (~2 ms at 50k), both O(bytes). Bounded small:
-    * entries hold MB-scale keys.
+    * String hash + equals (~2 ms at 50k), both O(bytes). Entries hold
+    * MB-scale keys, hence the small capacity.
     */
-  private val parseMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
+  private val parseMemo = new graft.Memo[String, Manifest](capacity = 16)
 
-  private def parseJson(s: String): Manifest = {
-    if (parseMemo.size > 16) parseMemo.clear()
-    parseMemo.computeIfAbsent(s, parseJson0)
-  }
+  private def parseJson(s: String): Manifest = parseMemo(s)(parseJson0(s))
 
   private def parseJson0(s: String): Manifest = {
     val version = """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(s)

@@ -379,11 +379,10 @@ object DataSkipping {
             val d = rel.getName(0).toString
             if (d.startsWith(prefix)) {
               val pv = d.stripPrefix(prefix)
-              val sz = Files.size(f)
               // mtime travels with the catalog: the index-backed V1
               // FileIndex surfaces it as _metadata.file_modification_time,
               // which must match what the listed read would report
-              val mt = Files.getLastModifiedTime(f).toMillis
+              val (mt, sz) = graft.Memo.stamp(f.toString)
               lines += s"""{"partition": "${esc(pv)}", "file": "${esc(
                 f.getFileName.toString)}", "bytes": $sz, "mtime": $mt}"""
               parts += pv
@@ -462,7 +461,8 @@ object DataSkipping {
     }.toOption
   }
 
-  /** [[statsMemo]]'s twin for the file index. Value: partition raw dir
+  /** [[statsMemo]]'s twin for the file index, keyed on the sidecar's
+    * (mtime, size) stamp too. Value: partition raw dir
     * value → (file basename, bytes, mtime-millis) triples, name-sorted —
     * or None for an UNPARSABLE index at that stamp (negative cache: an
     * acceleration sidecar degrades, never fails, but a corrupt one must
@@ -475,21 +475,18 @@ object DataSkipping {
     * listing path (and its weaker authority) for an immutable
     * generation.
     */
-  private val filesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String),
-    ((java.nio.file.attribute.FileTime, Long),
-      Option[Map[String, Seq[(String, Long, Long)]]])]()
+  private val filesMemo = new graft.Memo[(String, String, (Long, Long)),
+    Option[Map[String, Seq[(String, Long, Long)]]]](capacity = 256)
 
   private[graft] def readFileIndex(root: String, gen: String)
       : Option[Map[String, Seq[(String, Long, Long)]]] = {
     val p = Paths.get(root, gen, FilesFile)
     if (!Files.exists(p)) return None
     // stamp failure (file vanished between exists and stat) = no index
-    val stamp = scala.util.Try(
-      (Files.getLastModifiedTime(p), Files.size(p))).getOrElse(return None)
-    val key = (root, gen)
-    val hit = filesMemo.get(key)
-    if (hit != null && hit._1 == stamp) return hit._2
+    val stamp = scala.util.Try(graft.Memo.stamp(p.toString))
+      .getOrElse(return None)
+    val cached = filesMemo.get((root, gen, stamp))
+    if (cached.nonEmpty) return cached.get
     // read (transient, retryable — never cached) …
     val raw = try new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       catch { case scala.util.control.NonFatal(_) => return None }
@@ -521,15 +518,14 @@ object DataSkipping {
           ix.valuesIterator.exists(_.exists(_._3 == 0L)) =>
         backfillMtimes(root, gen, p, ix) match {
           case Some(fixed) =>
-            val s2 = scala.util.Try(
-              (Files.getLastModifiedTime(p), Files.size(p))).getOrElse(stamp)
+            val s2 = scala.util.Try(graft.Memo.stamp(p.toString))
+              .getOrElse(stamp)
             (Some(fixed), s2)
           case None => (parsed, stamp)
         }
       case _ => (parsed, stamp)
     }
-    if (filesMemo.size > 256) filesMemo.clear()
-    filesMemo.put(key, (memoStamp, upgraded))
+    filesMemo.put((root, gen, memoStamp), upgraded)
     upgraded
   }
 
@@ -557,8 +553,8 @@ object DataSkipping {
     val fixed = ix.map { case (pv, fs) =>
       pv -> fs.map { case (n, b, mt) =>
         if (mt > 0L) (n, b, mt)
-        else (n, b, Files.getLastModifiedTime(
-          genDir.resolve(s"$pc=$pv").resolve(n)).toMillis)
+        else (n, b, graft.Memo.stamp(
+          genDir.resolve(s"$pc=$pv").resolve(n).toString)._1)
       }
     }
     val lines = fixed.toSeq.flatMap { case (pv, fs) =>
@@ -1526,22 +1522,16 @@ object DataSkipping {
   /** [[statsMemo]]'s twin for the bloom sidecar — same stamp-keyed
     * invalidation (ANALYZE rewrites blooms via temp+move too).
     */
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), ((java.nio.file.attribute.FileTime, Long), Seq[ColBloom])]()
+  private val bloomMemo =
+    new graft.Memo[(String, String, (Long, Long)), Seq[ColBloom]](capacity = 256)
 
   /** The bloom records of a generation (empty when un-annotated). */
   def readBlooms(root: String, gen: String): Seq[ColBloom] = {
     val p = Paths.get(root, gen, BloomFile)
     if (!Files.exists(p)) return Nil
-    val stamp = (Files.getLastModifiedTime(p), Files.size(p))
-    val key = (root, gen)
-    val hit = bloomMemo.get(key)
-    if (hit != null && hit._1 == stamp) return hit._2
-    val fresh = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseBloom)
-    if (bloomMemo.size > 256) bloomMemo.clear()
-    bloomMemo.put(key, (stamp, fresh))
-    fresh
+    bloomMemo((root, gen, graft.Memo.stamp(p.toString)))(
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseBloom))
   }
 
   private def renderBloom(b: ColBloom): String = {
@@ -1580,7 +1570,8 @@ object DataSkipping {
       num("numBits").toInt, num("numHashes").toInt, num("salt"), words, file)
   }
 
-  /** Sidecar parse memo keyed by the file's (mtime, size) stamp: a
+  /** Sidecar parse memo keyed by the file's (mtime, size) stamp
+    * ([[graft.Memo.stamp]]): a
     * generation's DATA is immutable but its sidecar is not (`ANALYZE`
     * retrofits records via temp+move), so content identity rides the
     * stamp — a stat call per hit instead of an O(partitions) JSONL
@@ -1588,22 +1579,16 @@ object DataSkipping {
     * paths both read here; measured as the dominant term of a warm
     * pruned read at 16M/50k — TableBench `meta`).
     */
-  private val statsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), ((java.nio.file.attribute.FileTime, Long), Seq[ColStats])]()
+  private val statsMemo =
+    new graft.Memo[(String, String, (Long, Long)), Seq[ColStats]](capacity = 256)
 
   /** The stats records of a generation (empty when un-annotated). */
   def readStats(root: String, gen: String): Seq[ColStats] = {
     val p = Paths.get(root, gen, StatsFile)
     if (!Files.exists(p)) return Nil
-    val stamp = (Files.getLastModifiedTime(p), Files.size(p))
-    val key = (root, gen)
-    val hit = statsMemo.get(key)
-    if (hit != null && hit._1 == stamp) return hit._2
-    val fresh = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseRecord)
-    if (statsMemo.size > 256) statsMemo.clear()
-    statsMemo.put(key, (stamp, fresh))
-    fresh
+    statsMemo((root, gen, graft.Memo.stamp(p.toString)))(
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseRecord))
   }
 
   /** Keep iff some row COULD fall in [lower, upper]: all-null partitions

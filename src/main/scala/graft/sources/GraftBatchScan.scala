@@ -573,8 +573,8 @@ object GraftBatchScan extends org.apache.spark.internal.Logging {
     *    (root, snapshot version) — without the cache a persistently
     *    failing heal would re-run the two-pass materialization job
     *    during EVERY query's planning and fail silently each time, an
-    *    invisible repeated planning-time tax. The cache clears itself
-    *    by construction: any new commit changes the version key.
+    *    invisible repeated planning-time tax. Any new commit retires
+    *    the entry by construction: it changes the version key.
     * A policy REFUSAL (over-budget, pinned read, un-healable snapshot)
     * is not a failure — it is cheap metadata arithmetic, recomputed
     * per planning, never logged or cached.
@@ -593,16 +593,16 @@ object GraftBatchScan extends org.apache.spark.internal.Logging {
       AtomicCommit.widenedOf(m).nonEmpty) return false
     // the footer gate qualify enforces: a snapshot that would STILL be
     // rejected after the heal must not pay (or conflict-risk) a commit.
-    // uniformFooterSchema is memoized per (root, generation set) — the
-    // qualify call above already computed it
+    // uniformFooterSchema's footers are memoized per generation — the
+    // qualify call above already read them
     if (uniformFooterSchema(relation, m).isEmpty) return false
     val byteCap = Try(spark.sessionState.conf
         .getConfString(AutoMaterializeBytesConf,
           AutoMaterializeBytesDefault.toString).toLong).getOrElse(0L)
     val key = (relation.root, m.version)
-    // get, not containsKey: the failure cache is access-ordered LRU, and
-    // a snapshot still being planned against must stay resident
-    if (healFailures.get(key) != null) return false
+    // get marks the entry used: a snapshot still being planned against
+    // must stay resident in the LRU
+    if (healFailures.get(key).nonEmpty) return false
     // the ELIGIBILITY arithmetic sits OUTSIDE the caching catch: it is
     // cheap metadata work recomputed per planning, and a transient
     // error in it (a vacuum racing the sizeInBytes walk) must degrade
@@ -662,34 +662,19 @@ object GraftBatchScan extends org.apache.spark.internal.Logging {
     * Bounds the planning-time tax of a persistently failing heal to ONE
     * attempt per snapshot — a new commit changes the version and so
     * retries naturally. Conflicts are never recorded (the racing commit
-    * already changed the version). Bounded LRU (access-ordered, evicts
-    * ONE eldest entry past 4096) — never a wholesale clear, which would
-    * momentarily forget every cached failure and permit a retry storm
-    * of up to 4096 two-pass materialization attempts at planning time.
-    * Synchronized map: heal attempts are rare, planning-thread-count
-    * contention is irrelevant next to the attempt it gates.
+    * already changed the version). A [[graft.Memo]]: past 4096 entries
+    * it evicts only the least recently used, so a cached failure is
+    * never forgotten wholesale — that would permit a retry storm of up
+    * to 4096 two-pass materialization attempts at planning time.
     */
-  private val healFailures: java.util.Map[(String, Long), String] =
-    boundedLru(4096)
-
-  /** Access-ordered bounded LRU, thread-safe. Factory (not inline) so the
-    * eviction discipline is spec-testable at a small cap.
-    */
-  private[graft] def boundedLru(cap: Int)
-      : java.util.Map[(String, Long), String] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), String](
-        64, 0.75f, /*accessOrder=*/ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), String]): Boolean =
-          size() > cap
-      })
+  private val healFailures =
+    new graft.Memo[(String, Long), String](capacity = 4096)
 
   /** Why the last heal attempt on this exact snapshot failed, if one
     * did — the ops/test window into the failure cache.
     */
   private[graft] def healFailure(root: String, version: Long)
-      : Option[String] = Option(healFailures.get((root, version)))
+      : Option[String] = healFailures.get((root, version))
 
   /** The session's auto-materialization policy, rendered for the
     * operator surface (DESCRIBE DETAIL): `off` when disabled or the
@@ -780,28 +765,25 @@ object GraftBatchScan extends org.apache.spark.internal.Logging {
     * fields relaxed nullable (a per-generation REQUIRED field still
     * reads fine as optional). None when generations disagree or a probe
     * fails — the V1 path's per-generation `unionByName` handles those.
-    * Memoized per (root, generation set): one footer read per
-    * generation, ever, not per query.
+    * Each generation's footer comes from
+    * [[GraftFileIndex.footerSchema]]'s memo: one footer read per
+    * generation, not per query.
     */
   private[sources] def uniformFooterSchema(relation: GraftRelation,
-                                           m: AtomicCommit.Manifest): Option[StructType] = {
-    // ownerGens is the manifest instance's own lazy derivation — the
-    // per-call O(partitions) flatMap this key construction used to pay
-    // was most of the warm qualification cost at 200k partitions
-    val gens = m.ownerGens
-    schemaCache.computeIfAbsent((relation.root, gens), _ => Try {
-      val schemas = gens.map { g =>
-        val f = AtomicCommit.probeParquet(Seq(s"${relation.root}/$g"))
-        StructType(relation.session.read.parquet(f).schema
-          .filterNot(_.name == m.partitionCol)
+                                           m: AtomicCommit.Manifest): Option[StructType] =
+    Try {
+      // ownerGens is the manifest instance's own lazy derivation — a
+      // per-call O(partitions) flatMap here was most of the warm
+      // qualification cost at 200k partitions
+      val schemas = m.ownerGens.map { g =>
+        val footer = GraftFileIndex.footerSchema(relation.session,
+          relation.root, g)(AtomicCommit.probeParquet(Seq(s"${relation.root}/$g")))
+        StructType(footer.filterNot(_.name == m.partitionCol)
           .map(_.copy(nullable = true)))
       }
       val shape = schemas.map(_.map(f => (f.name, f.dataType)).sortBy(_._1))
       if (shape.distinct.size == 1) Some(schemas.head) else None
-    }.toOption.flatten)
-  }
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), Option[StructType]]()
+    }.toOption.flatten
 
   /** The data-column sort order the snapshot PROVABLY carries — the
     * longest prefix of [[AtomicCommit.SortedByProp]]'s recorded columns
@@ -854,26 +836,16 @@ object GraftBatchScan extends org.apache.spark.internal.Logging {
           // in place — rides the key as the sidecar's (mtime, size)
           // stamp: one stat call, and retrofitted evidence upgrades the
           // claim at the next planning instead of staling conservative
-          val sidecar = java.nio.file.Paths.get(root, gen,
-            DataSkipping.StatsFile)
-          val stamp = Try(java.nio.file.Files
-              .getLastModifiedTime(sidecar).toMillis + ":" +
-              java.nio.file.Files.size(sidecar)).getOrElse("absent")
-          val memoKey = (root, s"$v@$stamp", entries.keys.toSeq.sorted)
-          val cached = claimCache.get(memoKey)
-          if (cached != null) cached.takeWhile(projected)
-          else {
-            val computed = verifiedPrefix(root, m, entries, gen, cols)
-            if (claimCache.size > 256) claimCache.clear()
-            claimCache.put(memoKey, computed)
-            computed.takeWhile(projected)
-          }
+          val stamp = Try(graft.Memo.stamp(java.nio.file.Paths.get(root,
+            gen, DataSkipping.StatsFile).toString)).toOption
+          claimCache((root, v, stamp, entries.keys.toSeq.sorted))(
+            verifiedPrefix(root, m, entries, gen, cols)).takeWhile(projected)
         }
       }
     }
 
-  private val claimCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Seq[String]), Seq[String]]()
+  private val claimCache = new graft.Memo[
+    (String, String, Option[(Long, Long)], Seq[String]), Seq[String]](capacity = 256)
 
   /** The projection-independent verified prefix of the recorded sort
     * columns — the sidecar walk behind [[provenSortOrder]]'s claim.

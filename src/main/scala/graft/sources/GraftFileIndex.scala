@@ -112,35 +112,22 @@ private[graft] object GraftFileIndex {
     */
   private val BlockSize: Long = 128L * 1024 * 1024
 
-  /** Footer schema per (root, generation): a generation's files share
-    * one schema (written by one job — the [[AtomicCommit.probeParquet]]
-    * invariant) and the generation is immutable, so the first indexed
-    * file's footer is probed ONCE per generation per session, not per
-    * scan construction.
+  /** Footer schema per (root, generation, parquet-inference confs): a
+    * generation's files share one schema (written by one job — the
+    * [[AtomicCommit.probeParquet]] invariant) and the generation is
+    * immutable, so the footer of whichever file `probe` names is read
+    * once per generation, not per scan construction. Shared by this
+    * index's V1 frames and [[GraftBatchScan.uniformFooterSchema]]. The
+    * confs join the key because they change the inferred types
+    * ([[graft.Memo.parquetInference]]). A failing probe caches nothing.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
+  private[sources] def footerSchema(spark: SparkSession, root: String,
+                                    gen: String)(probe: => String): StructType =
+    footerMemo((root, gen, graft.Memo.parquetInference(spark)))(
+      spark.read.parquet(probe).schema)
 
-  /** None when no candidate file exists on disk — a physically-emptied
-    * partition directory (a spec-style prune proof, or tampering) must
-    * not break schema derivation any more than it broke
-    * [[AtomicCommit.probeParquet]]'s walk; the caller then falls back to
-    * the listing path, which owns the no-data error semantics.
-    */
-  private def footerSchema(spark: SparkSession, root: String, gen: String,
-                           candidates: Iterator[String])
-      : Option[StructType] = {
-    val key = (root, gen)
-    val hit = schemaMemo.get(key)
-    if (hit != null) return Some(hit)
-    candidates.find(p => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(p))).map { probe =>
-      val fresh = spark.read.parquet(probe).schema
-      if (schemaMemo.size > 1024) schemaMemo.clear()
-      schemaMemo.put(key, fresh)
-      fresh
-    }
-  }
+  private val footerMemo =
+    new graft.Memo[(String, String, String), StructType](capacity = 1024)
 
   /** The index-backed replacement for one generation's
     * [[AtomicCommit.readVerbatim]] leg: Some(frame) when the generation
@@ -186,9 +173,16 @@ private[graft] object GraftFileIndex {
       if (!complete) None
       else {
         val base = s"$root/$gen"
-        footerSchema(spark, root, gen, layout.iterator.map { case (raw, fs) =>
-          s"$base/$pc=$raw/${fs.head._1}"
-        }).map { footer =>
+        // None when no candidate file exists on disk — a physically
+        // emptied partition directory (a spec-style prune proof, or
+        // tampering) must not break schema derivation any more than it
+        // broke [[AtomicCommit.probeParquet]]'s walk; the caller then
+        // falls back to the listing path, which owns the no-data error
+        // semantics
+        val probe = layout.iterator
+          .map { case (raw, fs) => s"$base/$pc=$raw/${fs.head._1}" }
+          .find(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+        probe.map(p => footerSchema(spark, root, gen)(p)).map { footer =>
           val dataSchema = StructType(footer.fields.filterNot(_.name == pc))
           val rel = HadoopFsRelation(
             new GraftFileIndex(base, pc, layout,

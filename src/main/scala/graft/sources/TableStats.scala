@@ -17,12 +17,12 @@ import graft.sources.AtomicCommit.Manifest
   * Source of truth: the data files the snapshot actually references —
   * per partition, the sum of parquet byte sizes under each owner
   * generation's partition directory. That is a driver-side metadata walk
-  * (same cost class as vacuum's liveness listing), done ONCE per
-  * `(root, version)` and cached: manifests are immutable per version, so
-  * the cache never invalidates, and commits arrive at new versions with
-  * their own entries. Row counts come for free from the skipping
-  * sidecars ([[DataSkipping.readStats]]) when every owner generation is
-  * annotated; merge-on-read deletion vectors make the physical row count
+  * (same cost class as vacuum's liveness listing), done once per
+  * snapshot and cached in a bounded [[graft.Memo]]: manifests are
+  * immutable per version, so an entry never goes stale, and commits
+  * arrive at new versions with their own entries. Row counts come for
+  * free from the skipping sidecars ([[DataSkipping.readStats]]) when
+  * every owner generation is annotated; merge-on-read deletion vectors make the physical row count
   * an overestimate of the logical one, so a snapshot carrying DVs
   * reports bytes only (bytes stay RIGHT — the scan still reads those
   * files — while a wrong row count would mislead CBO cardinality).
@@ -49,20 +49,14 @@ object TableStats {
       m.props.getOrElse(AtomicCommit.StatsAnalyzedProp, ""))
 
   /** partition → live data bytes, cached per immutable snapshot. */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[Key, Map[String, Long]]()
+  private val bytesCache = new graft.Memo[Key, Map[String, Long]](capacity = 256)
 
   /** partition → physical rows (None when any owner gen lacks stats). */
   private val rowsCache =
-    new java.util.concurrent.ConcurrentHashMap[Key, Option[Map[String, Long]]]()
+    new graft.Memo[Key, Option[Map[String, Long]]](capacity = 256)
 
-  private def bounded[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit =
-    if (m.size > 256) m.clear() // snapshots churn in tests; keep it tiny
-
-  def partitionBytes(root: String, m: Manifest): Map[String, Long] = {
-    bounded(bytesCache)
-    bytesCache.computeIfAbsent(keyOf(root, m), _ => computeBytes(root, m))
-  }
+  def partitionBytes(root: String, m: Manifest): Map[String, Long] =
+    bytesCache(keyOf(root, m))(computeBytes(root, m))
 
   /** Per-partition live bytes: the generation's FILE INDEX when it has
     * one ([[DataSkipping.readFileIndex]] — bytes are recorded at stage
@@ -139,31 +133,19 @@ object TableStats {
     // O(1) warm path first — re-summing the per-partition map on every
     // call would be an O(partitions) fold per planning touch whenever
     // partitionBytes happened to materialize before the first
-    // whole-snapshot ask. ONE typed lookup: a containsKey-then-get pair
-    // races bounded()'s clear() on another planning thread, and Scala
-    // would unbox the resulting null to 0L — a zero-byte snapshot price
-    // that silently green-lights broadcasting an arbitrary fact table
-    val hit = sizeCache.get(key)
-    if (hit != null) return hit.longValue
-    val cached = bytesCache.get(key)
-    if (cached != null) {
-      val total = cached.values.sum
-      bounded(sizeCache)
-      sizeCache.put(key, total)
-      return total
-    }
-    bounded(sizeCache)
-    sizeCache.computeIfAbsent(key, _ => Long.box(
-      digestBytes(root, m).getOrElse(partitionBytes(root, m).values.sum)))
+    // whole-snapshot ask
+    sizeCache(key)(bytesCache.get(key) match {
+      case Some(bytes) => bytes.values.sum
+      case None =>
+        digestBytes(root, m).getOrElse(partitionBytes(root, m).values.sum)
+    })
   }
 
   /** Whole-snapshot byte total, memoized per immutable snapshot (the
     * digest path resolves it without materializing the per-partition
-    * map, so it gets its own cache). Values are BOXED so an absent key
-    * reads as null, never as an unboxed 0.
+    * map, so it gets its own cache).
     */
-  private val sizeCache =
-    new java.util.concurrent.ConcurrentHashMap[Key, java.lang.Long]()
+  private val sizeCache = new graft.Memo[Key, Long](capacity = 256)
 
   /** Digest-summed snapshot bytes: Some only when EVERY generation
     * carries a digest whose partition count equals the count this
@@ -200,10 +182,8 @@ object TableStats {
     * [[DataSkipping.commitWithStats]]) — callers fall back to
     * bytes-only statistics rather than guess.
     */
-  def partitionRows(root: String, m: Manifest): Option[Map[String, Long]] = {
-    bounded(rowsCache)
-    rowsCache.computeIfAbsent(keyOf(root, m), _ => computeRows(root, m))
-  }
+  def partitionRows(root: String, m: Manifest): Option[Map[String, Long]] =
+    rowsCache(keyOf(root, m))(computeRows(root, m))
 
   private def computeRows(root: String, m: Manifest): Option[Map[String, Long]] = {
     val gens = m.ownerGens
@@ -260,15 +240,13 @@ object TableStats {
                                numMax: Option[java.math.BigDecimal],
                                kind: String = "num")
 
-  private val colCache = new java.util.concurrent.ConcurrentHashMap[
-    (Key, String, Set[String]), Option[ColumnStats]]()
+  private val colCache = new graft.Memo[
+    (Key, String, Set[String]), Option[ColumnStats]](capacity = 256)
 
   def columnStats(root: String, m: Manifest, colName: String,
-                  parts: Set[String]): Option[ColumnStats] = {
-    bounded(colCache)
-    colCache.computeIfAbsent((keyOf(root, m), colName, parts),
-      _ => computeColumnStats(root, m, colName, parts))
-  }
+                  parts: Set[String]): Option[ColumnStats] =
+    colCache((keyOf(root, m), colName, parts))(
+      computeColumnStats(root, m, colName, parts))
 
   private def computeColumnStats(root: String, m: Manifest, colName: String,
                                  parts: Set[String]): Option[ColumnStats] = {
@@ -354,9 +332,9 @@ object TableStats {
   // ---- equi-depth histogram selectivity ([[DataSkipping.analyze]]'s
   // `_graft_hist.jsonl` sidecars) ------------------------------------
 
-  private val histCache = new java.util.concurrent.ConcurrentHashMap[
+  private val histCache = new graft.Memo[
     (Key, String, Set[String]),
-    Option[Seq[(Seq[java.math.BigDecimal], Long)]]]()
+    Option[Seq[(Seq[java.math.BigDecimal], Long)]]](capacity = 256)
 
   /** Per-slice (bucket bounds, non-null rows) for `colName` over the
     * selected partitions — None unless EVERY owner slice carries BOTH
@@ -366,34 +344,34 @@ object TableStats {
     */
   private def sliceHists(root: String, m: Manifest, colName: String,
                          parts: Set[String])
-      : Option[Seq[(Seq[java.math.BigDecimal], Long)]] = {
-    bounded(histCache)
-    histCache.computeIfAbsent((keyOf(root, m), colName, parts), _ => {
+      : Option[Seq[(Seq[java.math.BigDecimal], Long)]] =
+    histCache((keyOf(root, m), colName, parts)) {
       val selected = m.entries.filter { case (p, _) => parts(p) }
-      if (selected.isEmpty) return None
-      val gens = selected.values.flatMap(AtomicCommit.ownersOf).toSeq.distinct
-      val byGenH: Map[String, Map[String, DataSkipping.ColHist]] = gens.map { g =>
-        g -> DataSkipping.readHists(root, g).filter(_.col == colName)
-          .groupBy(_.partition).map { case (p, hs) => p -> hs.head }
-      }.toMap
-      val byGenS: Map[String, Map[String, DataSkipping.ColStats]] = gens.map { g =>
-        g -> DataSkipping.readStats(root, g)
-          .filter(s => s.file.isEmpty && s.col == colName)
-          .groupBy(_.partition).map { case (p, rs) => p -> rs.head }
-      }.toMap
-      val slices = selected.toSeq.flatMap { case (p, entry) =>
-        AtomicCommit.ownersOf(entry).map { g =>
-          for {
-            h <- byGenH(g).get(p)
-            s <- byGenS(g).get(p)
-            bounds <- scala.util.Try(
-              h.bounds.map(new java.math.BigDecimal(_))).toOption
-          } yield (bounds, math.max(0L, s.rows - s.nulls))
+      if (selected.isEmpty) None
+      else {
+        val gens = selected.values.flatMap(AtomicCommit.ownersOf).toSeq.distinct
+        val byGenH: Map[String, Map[String, DataSkipping.ColHist]] = gens.map { g =>
+          g -> DataSkipping.readHists(root, g).filter(_.col == colName)
+            .groupBy(_.partition).map { case (p, hs) => p -> hs.head }
+        }.toMap
+        val byGenS: Map[String, Map[String, DataSkipping.ColStats]] = gens.map { g =>
+          g -> DataSkipping.readStats(root, g)
+            .filter(s => s.file.isEmpty && s.col == colName)
+            .groupBy(_.partition).map { case (p, rs) => p -> rs.head }
+        }.toMap
+        val slices = selected.toSeq.flatMap { case (p, entry) =>
+          AtomicCommit.ownersOf(entry).map { g =>
+            for {
+              h <- byGenH(g).get(p)
+              s <- byGenS(g).get(p)
+              bounds <- scala.util.Try(
+                h.bounds.map(new java.math.BigDecimal(_))).toOption
+            } yield (bounds, math.max(0L, s.rows - s.nulls))
+          }
         }
+        if (slices.exists(_.isEmpty)) None else Some(slices.flatten)
       }
-      if (slices.exists(_.isEmpty)) None else Some(slices.flatten)
-    })
-  }
+    }
 
   /** Fraction of one slice's rows falling in [lo, hi] under its
     * equi-depth bounds: each bucket holds 1/k of the rows; degenerate

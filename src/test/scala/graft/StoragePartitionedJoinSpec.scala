@@ -1126,21 +1126,21 @@ class StoragePartitionedJoinSpec extends SparkSpec {
   }
 
   test("the heal-failure cache evicts one eldest entry past its cap — never wholesale — and access keeps a snapshot resident") {
-    // the factory GraftBatchScan.healFailures is built from, at a small
+    // the memo type GraftBatchScan.healFailures is built on, at a small
     // cap: crossing it must evict exactly the least-recently-USED entry,
     // so the one-attempt-per-snapshot discipline holds across the cap
     // (a wholesale clear would permit a retry storm of every previously
     // failed heal at planning time)
-    val c = GraftBatchScan.boundedLru(3)
+    val c = new Memo[(String, Long), String](capacity = 3)
     c.put(("r", 1L), "e1"); c.put(("r", 2L), "e2"); c.put(("r", 3L), "e3")
     // touch v1: it becomes most-recently-used
-    assert(c.get(("r", 1L)) === "e1")
+    assert(c.get(("r", 1L)) === Some("e1"))
     c.put(("r", 4L), "e4") // crosses the cap: evicts v2 (LRU), ONLY v2
     assert(c.size === 3, "the cap must hold")
-    assert(c.get(("r", 2L)) == null, "the least-recently-used entry evicts")
-    assert(c.get(("r", 1L)) === "e1",
+    assert(c.get(("r", 2L)).isEmpty, "the least-recently-used entry evicts")
+    assert(c.get(("r", 1L)) === Some("e1"),
       "an accessed snapshot survives the cap crossing")
-    assert(c.get(("r", 3L)) === "e3" && c.get(("r", 4L)) === "e4",
+    assert(c.get(("r", 3L)) === Some("e3") && c.get(("r", 4L)) === Some("e4"),
       "eviction is one entry, not a clear()")
   }
 
