@@ -10,7 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * tasks, and total shuffle-read/write bytes the execution scheduled —
   * the guide-§1 counters that raw wall time hides (a recompute shows up
   * as duplicated stages; a dead action as an extra job). Reps make warm
-  * (memoized-probe) cost visible next to cold, like TimeQuery.
+  * (memoized-probe) cost visible next to cold. It is also the ad-hoc
+  * timing probe: each rep's `[prof]` line carries its seconds and row
+  * count.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {

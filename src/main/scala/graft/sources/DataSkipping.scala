@@ -250,18 +250,11 @@ object DataSkipping {
     partRecords ++ fileRecords.filter(s => multiFile(s.partition))
   }
 
-  /** Render and write a generation's sidecar atomically (temp + move):
-    * a concurrent reader sees the old complete file or the new one,
-    * never a torn write.
-    */
+  /** Render and write a generation's sidecar atomically. */
   private def writeSidecar(genPath: String, records: Seq[ColStats]): Unit = {
-    val body = records.sortBy(s => (s.partition, s.col, s.file.getOrElse("")))
-      .map(renderRecord).mkString("", "\n", "\n")
-    val target = Paths.get(genPath, StatsFile)
-    val tmp = Paths.get(genPath, s".$StatsFile.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    JsonCodec.writeAtomically(Paths.get(genPath, StatsFile),
+      records.sortBy(s => (s.partition, s.col, s.file.getOrElse("")))
+        .map(renderRecord))
     writeColSummary(genPath, records)
   }
 
@@ -279,16 +272,13 @@ object DataSkipping {
     */
   val ColSumFile = "_graft_colsum.jsonl"
 
-  private def writeColSummary(genPath: String, records: Seq[ColStats]): Unit = {
+  private[sources] def writeColSummary(genPath: String,
+                                       records: Seq[ColStats]): Unit = {
     val lines = records.filter(_.file.isEmpty).groupBy(_.col).toSeq
       .sortBy(_._1).map { case (c, rs) =>
         val parts = rs.map(_.partition).distinct.size
         val kinds = rs.map(_.kind).distinct
         val kind = if (kinds.size == 1) kinds.head else ""
-        val ndvField =
-          if (rs.forall(_.ndv.nonEmpty))
-            s""","ndv":${rs.iterator.map(_.ndv.get).sum}"""
-          else ""
         def bd(o: Option[String]) =
           o.flatMap(v => scala.util.Try(new java.math.BigDecimal(v)).toOption)
         // bounds only where the exact path would use them (one uniform
@@ -297,22 +287,16 @@ object DataSkipping {
         val numeric = kinds.size == 1 && numericKind(kind)
         val mins = rs.flatMap(r => bd(r.min).map(_ -> r.min.get))
         val maxs = rs.flatMap(r => bd(r.max).map(_ -> r.max.get))
-        def f(o: Option[String]) =
-          o.map(v => s""""${esc(v)}"""").getOrElse("null")
         val mn = if (numeric && mins.nonEmpty) Some(mins.minBy(_._1)._2) else None
         val mx = if (numeric && maxs.nonEmpty) Some(maxs.maxBy(_._1)._2) else None
-        val psig = partSig(rs.map(_.partition).distinct)
-        s"""{"col":"${esc(c)}","parts":$parts,"psig":$psig,""" +
-          s""""kind":"${esc(kind)}",""" +
-          s""""min":${f(mn)},"max":${f(mx)},"nulls":${rs.map(_.nulls).sum},""" +
-          s""""rows":${rs.map(_.rows).sum}$ndvField}"""
+        JsonCodec.render("col" -> c, "parts" -> parts,
+          "psig" -> partSig(rs.map(_.partition).distinct), "kind" -> kind,
+          "min" -> mn.orNull, "max" -> mx.orNull, "nulls" -> rs.map(_.nulls).sum,
+          "rows" -> rs.map(_.rows).sum,
+          "ndv" -> (if (rs.forall(_.ndv.nonEmpty))
+            Some(rs.iterator.map(_.ndv.get).sum) else None))
       }
-    val target = Paths.get(genPath, ColSumFile)
-    val tmp = Paths.get(genPath, s".$ColSumFile.tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    JsonCodec.writeAtomically(Paths.get(genPath, ColSumFile), lines)
   }
 
   /** Parsed generation rollup: col → (parts, kind, min, max, nulls,
@@ -328,21 +312,12 @@ object DataSkipping {
     val p = Paths.get(root, gen, ColSumFile)
     if (!Files.exists(p)) return None
     scala.util.Try {
-      def sOpt(body: String, k: String): Option[String] =
-        (raw""""$k"\s*:\s*"((?:[^"\\]|\\.)*)"""").r
-          .findFirstMatchIn(body).map(m => unesc(m.group(1)))
-      def num(body: String, k: String): Option[Long] =
-        (raw""""$k"\s*:\s*(-?\d+)""").r
-          .findFirstMatchIn(body).map(_.group(1).toLong)
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map { line =>
-          sOpt(line, "col").get -> ColSummary(
-            num(line, "parts").get, num(line, "psig").getOrElse(0L),
-            sOpt(line, "kind").getOrElse(""),
-            sOpt(line, "min"), sOpt(line, "max"),
-            num(line, "nulls").get, num(line, "rows").get,
-            num(line, "ndv"))
-        }.toMap
+      JsonCodec.readLines(p).map { r =>
+        r.str("col") -> ColSummary(r.long("parts"),
+          r.longOpt("psig").getOrElse(0L), r.strOpt("kind").getOrElse(""),
+          r.strOpt("min"), r.strOpt("max"), r.long("nulls"), r.long("rows"),
+          r.longOpt("ndv"))
+      }.toMap
     }.toOption
   }
 
@@ -357,12 +332,9 @@ object DataSkipping {
     val base = Paths.get(root, gen)
     if (!Files.isDirectory(base)) return
     val prefix = s"$pc="
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    // the DIGEST rollups accumulate from the same loop, on the RAW dir
-    // names readers compare against (psig must hash those, not their
-    // JSON-escaped rendering)
-    val parts = scala.collection.mutable.HashSet.empty[String]
-    var bytes = 0L
+    // (raw partition dir value, basename, bytes, mtime) per data file
+    val files = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, Long, Long)]
     val s = Files.walk(base)
     try {
       val it = s.iterator()
@@ -383,38 +355,39 @@ object DataSkipping {
               // FileIndex surfaces it as _metadata.file_modification_time,
               // which must match what the listed read would report
               val (mt, sz) = graft.Memo.stamp(f.toString)
-              lines += s"""{"partition": "${esc(pv)}", "file": "${esc(
-                f.getFileName.toString)}", "bytes": $sz, "mtime": $mt}"""
-              parts += pv
-              bytes += sz
+              files += ((pv, f.getFileName.toString, sz, mt))
             }
           }
         }
       }
     } finally s.close()
-    val target = Paths.get(root, gen, FilesFile)
-    val tmp = Paths.get(root, gen, s".$FilesFile.tmp")
-    Files.write(tmp, lines.sorted.mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeIndexLines(base, files.toSeq)
     // the generation DIGEST, from the same walk (r19 verdict task 3):
     // whole-generation rollups so snapshot-level first-touch quantities
     // (planner sizeInBytes, DESCRIBE DETAIL num_files) are O(generations)
     // — the per-file index above is O(partitions) to parse, which at 50k
-    // partitions put ~0.4 s in front of the first query per snapshot
-    val dTarget = Paths.get(root, gen, DigestFile)
-    val dTmp = Paths.get(root, gen, s".$DigestFile.tmp")
+    // partitions put ~0.4 s in front of the first query per snapshot.
     // psig: order-free signature of the partition SET (count equality
     // alone could theoretically coincide across different sets after a
-    // rollback+replace sequence) — readers match count AND signature
-    Files.write(dTmp, s"""{"partitions": ${parts.size}, "files": ${
-      lines.size}, "bytes": $bytes, "psig": ${partSig(parts)}}"""
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(dTmp, dTarget,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // rollback+replace sequence) — readers match count AND signature.
+    // Both rollups hash the RAW dir names readers compare against
+    val parts = files.map(_._1).toSet
+    JsonCodec.writeAtomically(base.resolve(DigestFile), Seq(JsonCodec.render(
+      "partitions" -> parts.size, "files" -> files.size,
+      "bytes" -> files.iterator.map(_._3).sum, "psig" -> partSig(parts))))
   }
+
+  /** Write a file index from (raw partition value, basename, bytes,
+    * mtime) tuples — the stage-time writer and the mtime backfill share
+    * it.
+    */
+  private[sources] def writeIndexLines(genDir: java.nio.file.Path,
+      files: Seq[(String, String, Long, Long)]): Unit =
+    JsonCodec.writeAtomically(genDir.resolve(FilesFile),
+      files.sortBy(f => (f._1, f._2)).map { case (pv, n, b, mt) =>
+        JsonCodec.render("partition" -> pv, "file" -> n, "bytes" -> b,
+          "mtime" -> mt)
+      })
 
   /** One-line generation rollup written beside [[FilesFile]] from the
     * same stage-time walk: partition-dir count, data-file count, byte
@@ -453,11 +426,9 @@ object DataSkipping {
     val p = Paths.get(root, gen, DigestFile)
     if (!Files.exists(p)) return None
     scala.util.Try {
-      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      def f(k: String): Long =
-        (k + """"\s*:\s*(-?\d+)""").r.findFirstMatchIn(s).get.group(1).toLong
-      (f(""""partitions"""), f(""""files"""), f(""""bytes"""),
-        scala.util.Try(f(""""psig""")).getOrElse(0L))
+      val r = JsonCodec.readLines(p).head
+      (r.long("partitions"), r.long("files"), r.long("bytes"),
+        r.longOpt("psig").getOrElse(0L))
     }.toOption
   }
 
@@ -492,18 +463,11 @@ object DataSkipping {
       catch { case scala.util.control.NonFatal(_) => return None }
     // … then parse (deterministic at this stamp — negative-cacheable)
     val parsed = scala.util.Try {
-      val str = (""""partition"\s*:\s*"((?:[^"\\]|\\.)*)"""".r,
-        """"file"\s*:\s*"((?:[^"\\]|\\.)*)"""".r,
-        """"bytes"\s*:\s*(\d+)""".r,
-        """"mtime"\s*:\s*(\d+)""".r)
-      raw.split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map { line =>
-        (unesc(str._1.findFirstMatchIn(line).get.group(1)),
-          (unesc(str._2.findFirstMatchIn(line).get.group(1)),
-            str._3.findFirstMatchIn(line).get.group(1).toLong,
-            // 0 = a pre-mtime index: still authoritative for names and
-            // bytes; the V1 FileIndex declines it (metadata-column parity)
-            str._4.findFirstMatchIn(line).map(_.group(1).toLong)
-              .getOrElse(0L)))
+      JsonCodec.parseLines(raw).map { r =>
+        (r.str("partition"), (r.str("file"), r.long("bytes"),
+          // 0 = a pre-mtime index: still authoritative for names and
+          // bytes; the V1 FileIndex declines it (metadata-column parity)
+          r.longOpt("mtime").getOrElse(0L)))
       }.groupBy(_._1)
         .map { case (pv, xs) => pv -> xs.map(_._2).sortBy(_._1) }
     }.toOption
@@ -516,7 +480,7 @@ object DataSkipping {
     val (upgraded, memoStamp) = parsed match {
       case Some(ix) if ix.nonEmpty &&
           ix.valuesIterator.exists(_.exists(_._3 == 0L)) =>
-        backfillMtimes(root, gen, p, ix) match {
+        backfillMtimes(root, gen, ix) match {
           case Some(fixed) =>
             val s2 = scala.util.Try(graft.Memo.stamp(p.toString))
               .getOrElse(stamp)
@@ -537,7 +501,6 @@ object DataSkipping {
     * cost the catalog then saves per query. None on any failure.
     */
   private def backfillMtimes(root: String, gen: String,
-                             target: java.nio.file.Path,
                              ix: Map[String, Seq[(String, Long, Long)]])
       : Option[Map[String, Seq[(String, Long, Long)]]] = scala.util.Try {
     val genDir = Paths.get(root, gen)
@@ -557,17 +520,9 @@ object DataSkipping {
           genDir.resolve(s"$pc=$pv").resolve(n).toString)._1)
       }
     }
-    val lines = fixed.toSeq.flatMap { case (pv, fs) =>
-      fs.map { case (n, b, mt) =>
-        s"""{"partition": "${esc(pv)}", "file": "${esc(n)}", "bytes": $b, "mtime": $mt}"""
-      }
-    }.sorted
-    val tmp = genDir.resolve(s".$FilesFile.tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeIndexLines(genDir, fixed.toSeq.flatMap { case (pv, fs) =>
+      fs.map { case (n, b, mt) => (pv, n, b, mt) }
+    })
     fixed
   }.toOption
 
@@ -648,23 +603,8 @@ object DataSkipping {
   def readHists(root: String, gen: String): Seq[ColHist] = {
     val p = Paths.get(root, gen, HistFile)
     if (!Files.exists(p)) return Nil
-    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseHist)
-  }
-
-  private def renderHist(h: ColHist): String =
-    s"""{"partition":"${esc(h.partition)}","col":"${esc(h.col)}",""" +
-      s""""bounds":"${h.bounds.mkString(";")}"}"""
-
-  private def parseHist(line: String): ColHist = {
-    def str(name: String): String =
-      (s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(line)
-        .map(m => unesc(m.group(1)))
-        .getOrElse(sys.error(s"bad hist record (no $name): $line"))
-    val bounds = """"bounds"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(_.group(1)).getOrElse(sys.error(s"bad hist record: $line"))
-    ColHist(str("partition"), str("col"),
-      bounds.split(';').toSeq.filter(_.nonEmpty))
+    JsonCodec.readLines(p).map(r => ColHist(r.str("partition"), r.str("col"),
+      r.str("bounds").split(';').toSeq.filter(_.nonEmpty)))
   }
 
   /** One aggregation job: per-partition equi-depth boundaries of every
@@ -712,15 +652,12 @@ object DataSkipping {
     }
   }
 
-  private def writeHistSidecar(genPath: String, records: Seq[ColHist]): Unit = {
-    val body = records.sortBy(h => (h.partition, h.col))
-      .map(renderHist).mkString("", "\n", "\n")
-    val target = Paths.get(genPath, HistFile)
-    val tmp = Paths.get(genPath, s".$HistFile.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private[sources] def writeHistSidecar(genPath: String,
+                                        records: Seq[ColHist]): Unit =
+    JsonCodec.writeAtomically(Paths.get(genPath, HistFile),
+      records.sortBy(h => (h.partition, h.col)).map(h => JsonCodec.render(
+        "partition" -> h.partition, "col" -> h.col,
+        "bounds" -> h.bounds.mkString(";"))))
 
   def analyze(spark: SparkSession, root: String,
               m: AtomicCommit.Manifest, cols: Seq[String]): Int = {
@@ -1402,10 +1339,9 @@ object DataSkipping {
       }
       partRecords ++ fileRecords
     }
-    val body = records.sortBy(b => (b.partition, b.col, b.file.getOrElse("")))
-      .map(renderBloom).mkString("", "\n", "\n")
-    Files.write(Paths.get(genPath, BloomFile),
-      body.getBytes(StandardCharsets.UTF_8))
+    JsonCodec.writeAtomically(Paths.get(genPath, BloomFile),
+      records.sortBy(b => (b.partition, b.col, b.file.getOrElse("")))
+        .map(renderBloom))
   }
 
   /** Point-lookup read: rows with `colName = value`, scanning only
@@ -1530,44 +1466,27 @@ object DataSkipping {
     val p = Paths.get(root, gen, BloomFile)
     if (!Files.exists(p)) return Nil
     bloomMemo((root, gen, graft.Memo.stamp(p.toString)))(
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseBloom))
+      JsonCodec.readLines(p).map(parseBloom))
   }
 
-  private def renderBloom(b: ColBloom): String = {
-    val words = b.words.toSeq.sortBy(_._1)
-      .map { case (w, bits) => s"$w:${java.lang.Long.toHexString(bits)}" }
-      .mkString(";")
-    // `file` rendered only when present — partition-level records keep
-    // the pre-r13 byte format, absent parses back as None
-    val fileField = b.file.map(v => s""""file":"${esc(v)}",""").getOrElse("")
-    s"""{"partition":"${esc(b.partition)}","col":"${esc(b.col)}",$fileField""" +
-      s""""dataType":"${esc(b.dataType)}","numBits":${b.numBits},""" +
-      s""""numHashes":${b.numHashes},"salt":${b.salt},"words":"$words"}"""
-  }
-  private def parseBloom(line: String): ColBloom = {
-    def str(name: String): String =
-      (s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(line)
-        .map(m => unesc(m.group(1)))
-        .getOrElse(sys.error(s"bad bloom record (no $name): $line"))
-    def num(name: String): Long =
-      (s""""$name"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(line)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"bad bloom record (no $name): $line"))
-    // the words blob is long (kilobytes) but escape-free by construction
-    // (digits/colon/semicolon/hex) — the generic escaped-string regex
-    // would recurse once per character and overflow the stack on it, so
-    // it gets a linear single-char-class pattern instead
-    val wordsBlob = """"words"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(_.group(1)).getOrElse(sys.error(s"bad bloom record (no words): $line"))
-    val words = wordsBlob.split(';').toSeq.filter(_.nonEmpty).map { kv =>
+  // `file` is left out when absent: partition-level records keep the
+  // pre-r13 byte format, and an absent field parses back as None
+  private[sources] def renderBloom(b: ColBloom): String =
+    JsonCodec.render("partition" -> b.partition, "col" -> b.col,
+      "file" -> b.file, "dataType" -> b.dataType, "numBits" -> b.numBits,
+      "numHashes" -> b.numHashes, "salt" -> b.salt,
+      "words" -> b.words.toSeq.sortBy(_._1)
+        .map { case (w, bits) => s"$w:${java.lang.Long.toHexString(bits)}" }
+        .mkString(";"))
+
+  private[sources] def parseBloom(r: JsonCodec.Record): ColBloom = {
+    val words = r.str("words").split(';').toSeq.filter(_.nonEmpty).map { kv =>
       val Array(w, hex) = kv.split(':')
       w.toInt -> java.lang.Long.parseUnsignedLong(hex, 16)
     }.toMap
-    val file = (s""""file"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-      .findFirstMatchIn(line).map(m => unesc(m.group(1)))
-    ColBloom(str("partition"), str("col"), str("dataType"),
-      num("numBits").toInt, num("numHashes").toInt, num("salt"), words, file)
+    ColBloom(r.str("partition"), r.str("col"), r.str("dataType"),
+      r.long("numBits").toInt, r.long("numHashes").toInt, r.long("salt"),
+      words, r.strOpt("file"))
   }
 
   /** Sidecar parse memo keyed by the file's (mtime, size) stamp
@@ -1587,8 +1506,7 @@ object DataSkipping {
     val p = Paths.get(root, gen, StatsFile)
     if (!Files.exists(p)) return Nil
     statsMemo((root, gen, graft.Memo.stamp(p.toString)))(
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).map(parseRecord))
+      JsonCodec.readLines(p).map(parseRecord))
   }
 
   /** Keep iff some row COULD fall in [lower, upper]: all-null partitions
@@ -1713,45 +1631,17 @@ object DataSkipping {
     java.lang.Boolean.compare(ai.hasNext, bi.hasNext)
   }
 
-  // same hand-rolled JSON discipline as the manifest: flat string fields,
-  // two escaped characters, one record per line
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-  private def renderRecord(s: ColStats): String = {
-    def f(o: Option[String]) = o.map(v => s""""${esc(v)}"""").getOrElse("null")
-    // `file` rendered only when present: partition-level records keep the
-    // pre-r13 byte format, and an absent field parses back as None
-    val fileField = s.file.map(v => s""""file":"${esc(v)}",""").getOrElse("")
-    // ndv/sum rendered only when present: pre-r15/r17 sidecars stay
-    // byte-stable and an absent field parses back as None
-    val ndvField = s.ndv.map(v => s""","ndv":$v""").getOrElse("")
-    val sumField = s.sum.map(v => s""","sum":"${esc(v)}"""").getOrElse("")
-    s"""{"partition":"${esc(s.partition)}","col":"${esc(s.col)}",$fileField"kind":"${s.kind}",""" +
-      s""""min":${f(s.min)},"max":${f(s.max)},"nulls":${s.nulls},"rows":${s.rows}$ndvField$sumField}"""
-  }
-  private def parseRecord(line: String): ColStats = {
-    def str(name: String): String =
-      (s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(line)
-        .map(m => unesc(m.group(1)))
-        .getOrElse(sys.error(s"bad stats record (no $name): $line"))
-    def optStr(name: String): Option[String] =
-      if ((s""""$name"\\s*:\\s*null""").r.findFirstIn(line).isDefined) None
-      else Some(str(name))
-    def num(name: String): Long =
-      (s""""$name"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(line)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"bad stats record (no $name): $line"))
-    // absent (pre-r13 records) and null both mean partition-level
-    def absentOk(name: String): Option[String] =
-      (s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(line)
-        .map(m => unesc(m.group(1)))
-    def optNum(name: String): Option[Long] =
-      (s""""$name"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(line)
-        .map(_.group(1).toLong)
-    ColStats(str("partition"), str("col"), str("kind"),
-      optStr("min"), optStr("max"), num("nulls"), num("rows"),
-      absentOk("file"), optNum("ndv"), absentOk("sum"))
-  }
+  // `file`, `ndv` and `sum` are left out when absent: older sidecars
+  // (pre-r13/r15/r17) stay byte-stable and an absent field parses back as
+  // None; an all-null slice renders its bounds as JSON null
+  private[sources] def renderRecord(s: ColStats): String =
+    JsonCodec.render("partition" -> s.partition, "col" -> s.col,
+      "file" -> s.file, "kind" -> s.kind, "min" -> s.min.orNull,
+      "max" -> s.max.orNull, "nulls" -> s.nulls, "rows" -> s.rows,
+      "ndv" -> s.ndv, "sum" -> s.sum)
+
+  private[sources] def parseRecord(r: JsonCodec.Record): ColStats =
+    ColStats(r.str("partition"), r.str("col"), r.str("kind"),
+      r.strOpt("min"), r.strOpt("max"), r.long("nulls"), r.long("rows"),
+      r.strOpt("file"), r.longOpt("ndv"), r.strOpt("sum"))
 }

@@ -377,15 +377,9 @@ object GraftCatalog {
     */
   private[sources] val DeclaredFile = "_graft_declared.json"
 
-  private def escJ(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unescJ(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
   private[sources] def writeDeclared(store: ManifestStore, pc: String,
                                      schema: StructType): Unit = {
-    val body =
-      s"""{"partitionCol":"${escJ(pc)}","ddl":"${escJ(schema.toDDL)}"}"""
+    val body = JsonCodec.render("partitionCol" -> pc, "ddl" -> schema.toDDL)
     if (!store.putIfAbsent(DeclaredFile,
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))) {
       // a racing CREATE (or a leftover declaration) won — identical is
@@ -399,12 +393,9 @@ object GraftCatalog {
   private[sources] def readDeclared(store: ManifestStore)
       : Option[(String, StructType)] =
     store.get(DeclaredFile).map { bytes =>
-      val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      def field(name: String): String =
-        (s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-          .findFirstMatchIn(s).map(m => unescJ(m.group(1)))
-          .getOrElse(sys.error(s"bad declaration (no $name): $s"))
-      (field("partitionCol"), StructType.fromDDL(field("ddl")))
+      val r = JsonCodec.parse(
+        new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+      (r.str("partitionCol"), StructType.fromDDL(r.str("ddl")))
     }
 }
 

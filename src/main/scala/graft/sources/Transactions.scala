@@ -142,10 +142,8 @@ object Transactions {
   private def decisionAt(decisionRoot: String, txnId: String): Decision =
     storeFor(decisionRoot).get(decisionName(txnId)) match {
       case Some(bytes) =>
-        // match the decision FIELD, never the whole body — the recorded
-        // table paths are arbitrary strings that could contain "commit"
-        if (new String(bytes, StandardCharsets.UTF_8)
-            .contains("\"decision\":\"commit\"")) Committed
+        if (JsonCodec.parse(new String(bytes, StandardCharsets.UTF_8))
+            .str("decision") == "commit") Committed
         else Aborted
       case None => Undecided
     }
@@ -154,11 +152,11 @@ object Transactions {
     * returns the decision that actually holds — ours if the create won,
     * the earlier winner's otherwise.
     */
-  private def decide(decisionRoot: String, txnId: String, commit: Boolean,
-                     tables: Seq[String]): Decision = {
+  private[sources] def decide(decisionRoot: String, txnId: String,
+                              commit: Boolean, tables: Seq[String]): Decision = {
     val verdict = if (commit) "commit" else "abort"
-    val body =
-      s"""{"txn":"$txnId","decision":"$verdict","tables":"${tables.mkString(",")}"}"""
+    val body = JsonCodec.render("txn" -> txnId, "decision" -> verdict,
+      "tables" -> tables.mkString(","))
     storeFor(decisionRoot).putIfAbsent(decisionName(txnId),
       body.getBytes(StandardCharsets.UTF_8))
     decisionAt(decisionRoot, txnId)
@@ -376,11 +374,11 @@ object Transactions {
     store.list().filter(n => n.startsWith(DecisionPrefix) &&
         n.endsWith(".json")).filter { n =>
       store.get(n).exists { bytes =>
-        val body = new String(bytes, StandardCharsets.UTF_8)
-        val txnId = """"txn"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(body)
-          .map(_.group(1))
-        val tables = """"tables"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(body)
-          .map(_.group(1).split(',').toSeq.filter(_.nonEmpty))
+        val r = scala.util.Try(
+          JsonCodec.parse(new String(bytes, StandardCharsets.UTF_8))).toOption
+        val txnId = r.flatMap(_.strOpt("txn")).filter(_.nonEmpty)
+        val tables = r.flatMap(_.strOpt("tables"))
+          .map(_.split(',').toSeq.filter(_.nonEmpty))
         (txnId, tables) match {
           case (Some(id), Some(ts)) if ts.nonEmpty =>
             ts.forall { t =>
@@ -391,8 +389,7 @@ object Transactions {
                 // dropped table) — keep the decision, it's tiny
                 vs.nonEmpty && vs.forall { v =>
                   !s.get(AtomicCommit.manifestName(v)).exists(b =>
-                    new String(b, StandardCharsets.UTF_8)
-                      .contains(s""""${IdKey}":"$id""""))
+                    AtomicCommit.parseBody(b).props.get(IdKey).contains(id))
                 }
               } catch { case _: Throwable => false }
             }

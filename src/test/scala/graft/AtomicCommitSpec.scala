@@ -387,7 +387,7 @@ class AtomicCommitSpec extends SparkSpec {
     check("MoR delete evidence")
   }
 
-  test("manifest props ride the atomic swap, carry forward, and reject braces") {
+  test("manifest props ride the atomic swap, carry forward, and round-trip braces") {
     val root = freshRoot()
     val s1 = AtomicCommit.stage(spark, root,
       Seq((1L, "A", 1.0)).toDF("k", "flag", "v"), "flag")
@@ -402,14 +402,14 @@ class AtomicCommitSpec extends SparkSpec {
       Seq((3L, "B", 3.0)).toDF("k", "flag", "v"), "flag")
     AtomicCommit.publish(root, s2.copy(props = Map("n" -> "2")))
     assert(userProps() === Map("owner" -> "ingest", "n" -> "2"))
-    // a brace would corrupt the flat-blob parser for every later reader —
-    // rejected at the commit boundary, nothing published
+    // braces, quotes and backslashes are ordinary prop text: they publish
+    // and every later reader sees them verbatim
     val s3 = AtomicCommit.stage(spark, root,
       Seq((5L, "C", 5.0)).toDF("k", "flag", "v"), "flag")
-    intercept[IllegalArgumentException] {
-      AtomicCommit.publish(root, s3.copy(props = Map("bad" -> "{oops}")))
-    }
-    assert(AtomicCommit.currentVersion(root) === Some(2L))
+    AtomicCommit.publish(root, s3.copy(props = Map("{k}" -> "{\"oops\"}\\")))
+    assert(AtomicCommit.currentVersion(root) === Some(3L))
+    assert(userProps() === Map("owner" -> "ingest", "n" -> "2",
+      "{k}" -> "{\"oops\"}\\"))
   }
 
   test("vacuum keepVersions: the retention window stays fully time-travelable") {

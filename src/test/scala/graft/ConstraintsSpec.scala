@@ -69,9 +69,14 @@ class ConstraintsSpec extends SparkSpec {
       AtomicCommit.addConstraint(spark, root, store, "n_nonneg", "n >= 0")
     }
     assert(AtomicCommit.constraints(store) === Map.empty)
-    // braces would corrupt the props blob — rejected up front
-    intercept[IllegalArgumentException] {
-      AtomicCommit.addConstraint(spark, root, store, "bad", "n >= {0}")
+    // braces are ordinary expression text: recorded verbatim and enforced
+    AtomicCommit.addConstraint(spark, root, store, "{braced}",
+      "concat('{', p, '}') <> '{b}'")
+    assert(AtomicCommit.constraints(store) ===
+      Map("{braced}" -> "concat('{', p, '}') <> '{b}'"))
+    intercept[AtomicCommit.ConstraintViolationException] {
+      AtomicCommit.commitAppendPartitions(spark, root, store,
+        Seq(("b", 2L, 5L)).toDF("p", "k", "n"), "p", 1)
     }
   }
 

@@ -102,9 +102,12 @@ class TagsSpec extends SparkSpec {
     intercept[RuntimeException] {
       AtomicCommit.tag(root, store, "ghost", 999L)
     }
-    // bad names rejected before any commit
+    // an empty name is rejected before any commit; braces and quotes are
+    // ordinary name text
     intercept[IllegalArgumentException] {
-      AtomicCommit.tag(root, store, "br{ce", v1)
+      AtomicCommit.tag(root, store, "", v1)
     }
+    AtomicCommit.tag(root, store, "br{ce\"", v1)
+    assert(AtomicCommit.tags(store) === Map("pin" -> v1, "br{ce\"" -> v1))
   }
 }
